@@ -16,12 +16,6 @@ final class KgModel(
     val weights: Array[Array[Double]], // [predIdx][featureId]
     val tau: Double) extends Serializable {
 
-  /** Aho–Corasick automaton over the same dictionary (A6 mode "aho") —
-    * transient+lazy so it is built once per executor JVM on first use, never
-    * serialized with the broadcast. Equivalence with scanMentions is asserted
-    * by AhoSpec/PipelineSpec. */
-  @transient lazy val aho: TokenAho = TokenAho.build((uni.values ++ bi.values).toSeq)
-
   /** Bigram dictionary as a two-level map (first token → second token →
     * entry), built once per executor JVM: the scan probes it WITHOUT
     * concatenating "t1 t2" per position — at corpus scale that concat was one
@@ -125,9 +119,10 @@ final class KgModel(
 
   /** Greedy longest-match dictionary scan over lowercase tokens (pinned
     * semantics, SURVEY.md §2 A6): at each position prefer the 2-gram match,
-    * consume matched tokens, advance. The broadcast-join implementation in
-    * MentionJoin reproduces exactly this via sorted greedy selection
-    * (MentionEquivalenceSpec asserts equality). */
+    * consume matched tokens, advance. Dictionary surfaces are 1 or 2 tokens
+    * ([[KgModel.fromData]] rejects longer ones). This String form is the
+    * oracle for the production [[scanMentionsU8]] (RelationsGenSpec asserts
+    * equality). */
   def scanMentions(tokens: scala.collection.IndexedSeq[String]): IndexedSeq[Mention] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Mention]
     val n = tokens.length
@@ -289,9 +284,17 @@ object KgModel {
   private[graft] def threadMentionScratch(): Scratch[Mention] = mentionScratch.get()
   private[graft] def threadRelationScratch(): Scratch[ScoredRelation] = relationScratch.get()
 
-  /** Build + broadcast a model from in-memory rows (no I/O). */
+  /** Build + broadcast a model from in-memory rows (no I/O). Every surface
+    * must be one token or two tokens joined by one space — the only shapes
+    * the mention scan can match — else IllegalArgumentException. */
   def fromData(spark: SparkSession, dict: Seq[DictEntry], preds0: Seq[Predicate],
                weightRows: Seq[(String, Long, Double)], tau: Double): Broadcast[KgModel] = {
+    dict.foreach { e =>
+      val toks = e.surface.split(" ", -1)
+      require(toks.length <= 2 && toks.forall(_.nonEmpty),
+        s"dictionary surface '${e.surface}' (entity ${e.entityId}) is not 1 or 2 " +
+          "space-separated tokens; the mention scan cannot match it")
+    }
     def toMap(es: Seq[DictEntry]): Map[String, DictEntry] =
       es.groupBy(_.surface).map { case (s, grp) =>
         s -> grp.minBy(e => (-e.prior, e.entityId))

@@ -35,12 +35,3 @@ final case class ScoredRelation(
     pred: String,
     obj: String,
     score: Double)
-
-/** A canonical output triple with provenance (output table, SURVEY.md §1.2). */
-final case class Triple(
-    subj: String,
-    pred: String,
-    obj: String,
-    score: Double,
-    nEvidence: Long,
-    firstUrl: String)

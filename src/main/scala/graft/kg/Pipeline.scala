@@ -18,21 +18,20 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * with per-part manifest checkpointing/resume [A13] and metrics [A14].
   */
 object Pipeline {
-  /** mentionMode selects the A6 dictionary-scan implementation inside the
-    * fused relations UDF: "scan" = the 1/2-gram hash-map greedy scan (default;
-    * exactly the fixture dictionary's shape), "aho" = the token-level
-    * Aho–Corasick automaton (same greedy semantics — AhoSpec asserts equality
-    * — but handles arbitrary-length surfaces in one O(sentence) pass). The
-    * fully-relational broadcast-join mode lives in [[MentionJoin]] (a
-    * different dataflow, used when mentions themselves are the product). */
+  /** One pipeline run: the dictionary/weights fixtures, the output directory,
+    * the in-scope languages, and P, the url-hash part count (the checkpoint
+    * and lineage unit). */
   final case class Config(
       fixturesDir: String,
       outDir: String,
       langs: Seq[String] = Seq("en"),
-      numParts: Int = 64,
-      numBuckets: Int = 16,
-      repartitionInput: Boolean = true,
-      mentionMode: String = "scan")
+      numParts: Int = 64)
+
+  /** Output table bucket count: subj-hash buckets of the materialized
+    * triples table. */
+  private val NumBuckets = 16
+
+  private val OverwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
 
   /** `mentions`/`candidates` come from task-side accumulators: retried or
     * speculatively-executed tasks double-count, so treat them as approximate
@@ -56,9 +55,7 @@ object Pipeline {
     * DataFrame out — used by tests and the harness flagship. */
   def triples(spark: SparkSession, webpages: DataFrame, model: Broadcast[KgModel],
               cfg: Config): DataFrame = {
-    val rels = Stages.extractRelations(
-      webpages, model, cfg.langs, cfg.numParts, cfg.repartitionInput,
-      mentionMode = cfg.mentionMode)
+    val rels = Stages.extractRelations(webpages, model, cfg.langs, cfg.numParts)
     Stages.mergeTriples(Stages.partialTriples(rels))
       .select(col("subj"), col("pred"), col("obj"), col("score"),
         col("n_evidence"), col("first_url"))
@@ -69,10 +66,26 @@ object Pipeline {
     * into the bucketed output table. Safe to re-run after any crash. */
   def run(spark: SparkSession, webpagesPath: String, cfg: Config): RunStats = {
     val t0 = System.nanoTime()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // session-global state is restored on every exit, failed runs included
+    val prevMode = spark.conf.getOption(OverwriteModeKey)
+    spark.conf.set(OverwriteModeKey, "dynamic")
     val stageListener = new StageMetricsListener
     spark.sparkContext.addSparkListener(stageListener)
+    val stats =
+      try commitAndFinalize(spark, webpagesPath, cfg, t0)
+      finally {
+        spark.sparkContext.removeSparkListener(stageListener)
+        prevMode match {
+          case Some(v) => spark.conf.set(OverwriteModeKey, v)
+          case None => spark.conf.unset(OverwriteModeKey)
+        }
+      }
+    writeMetrics(cfg.outDir, stats, stageListener.lines)
+    stats
+  }
 
+  private def commitAndFinalize(spark: SparkSession, webpagesPath: String, cfg: Config,
+                                t0: Long): RunStats = {
     val model = KgModel.load(spark, cfg.fixturesDir)
     val webpages = spark.read.parquet(webpagesPath)
     val committed = Checkpoint.committedParts(spark, cfg.outDir)
@@ -89,12 +102,11 @@ object Pipeline {
       // counts and the present-part commit rule are read back from the written
       // partials — the input is scanned exactly once per run (LineageSpec
       // asserts), where round 2 paid two extra (column-pruned) input scans.
-      val part = Stages.partitionedAll(webpages, cfg.langs, cfg.numParts, cfg.repartitionInput)
+      val part = Stages.partitionedAll(webpages, cfg.langs, cfg.numParts)
         .filter(col("part_id").isin(todo: _*))
       val rels = Stages.relations(
         Stages.tokenized(Stages.sentencesOuter(Stages.pageText(part))),
-        model, Some(accMentions), Some(accCandidates), cfg.mentionMode,
-        pageMarkers = true)
+        model, Some(accMentions), Some(accCandidates), pageMarkers = true)
       val partials = Stages.partialTriples(rels)
 
       // dynamic partition overwrite: a rerun replaces exactly the part dirs
@@ -133,7 +145,7 @@ object Pipeline {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(partialsSchema.dropRight(1)))
     val merged = Stages.mergeTriples(partials0)
-      .withColumn("bucket", Stages.subjBucket(cfg.numBuckets))
+      .withColumn("bucket", Stages.subjBucket(NumBuckets))
     val io = TableIO.Parquet(cfg.outDir)
     // a partitionBy write of an empty frame yields no schema-bearing files —
     // fall back to a plain (schema-preserving) empty parquet table
@@ -145,11 +157,8 @@ object Pipeline {
     // explicit schema: an all-empty write may contain no schema-bearing files
     val nTriples = spark.read.schema(merged.schema).parquet(triplesPath(cfg.outDir)).count()
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    val stats = RunStats(todo.size, committed.size, pages,
+    RunStats(todo.size, committed.size, pages,
       accMentions.value, accCandidates.value, nTriples, wallMs)
-    spark.sparkContext.removeSparkListener(stageListener)
-    writeMetrics(cfg.outDir, stats, stageListener.lines)
-    stats
   }
 
   /** A14 — run-level metrics log (per-partition lineage lives in _manifest). */

@@ -1,6 +1,5 @@
 package graft.kg
 
-import graft.text.{Extract, TextModel}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -48,11 +47,8 @@ object Stages {
     if (repartitionInput) tagged.repartition(numParts, col("part_id")) else tagged
   }
 
-  /** A3 — HTML→text, the pinned byte-identical extractor. Default path is the
-    * native Catalyst expression (codegen-fused, null-intolerant — SURVEY.md
-    * §4.3); the udf() wrapper is kept for the equivalence spec. */
-  val extractTextUdf = udf((html: Array[Byte]) => Extract.text(html))
-
+  /** A3 — HTML→text, the pinned byte-identical extractor, as the native
+    * Catalyst expression (codegen-fused, null-intolerant — SURVEY.md §4.3). */
   def pageText(partitioned: DataFrame): DataFrame =
     partitioned
       .withColumn("text", graft.plans.GraftExtensions.extractText(col("html")))
@@ -103,10 +99,11 @@ object Stages {
 
   /** A6–A10 fused: greedy dictionary scan → ordered pair candidates →
     * hashed featurization → broadcast-weights scoring → linked relations.
-    * One narrow UDF (tokens in, scored relations out) so Catalyst can prune
-    * every other column; accumulators feed per-run metrics (A14 — approximate
-    * under task retries, see Pipeline.RunStats). mentionMode "scan" | "aho"
-    * selects the A6 implementation (Pipeline.Config scaladoc).
+    * One narrow generator (tokens in, scored relations out) so Catalyst can
+    * prune every other column; accumulators feed per-run metrics (A14 —
+    * approximate under task retries, see Pipeline.RunStats). The scan is
+    * [[KgModel.scanMentionsU8]]: greedy longest match over 1- and 2-token
+    * dictionary surfaces.
     *
     * pageMarkers=true (requires the [[partitionedAll]] + [[sentencesOuter]]
     * flow upstream, which supplies `in_scope` and per-page anchor rows):
@@ -115,82 +112,31 @@ object Stages {
   def relations(tokenized: DataFrame, model: Broadcast[KgModel],
                 accMentions: Option[LongAccumulator] = None,
                 accCandidates: Option[LongAccumulator] = None,
-                mentionMode: String = "scan",
                 pageMarkers: Boolean = false): DataFrame = {
-    require(mentionMode == "scan" || mentionMode == "aho",
-      s"unknown mentionMode '$mentionMode' (expected scan|aho)")
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val (anchorCol, inScopeCol) = markerCols(pageMarkers)
     val gen = graft.plans.RelationsGenExpr(
       ColumnBridge.expression(col("tokens")),
       ColumnBridge.expression(anchorCol),
       ColumnBridge.expression(inScopeCol),
-      model, mentionMode == "aho", accMentions, accCandidates)
+      model, accMentions, accCandidates)
     tokenized.select(col("url"), col("part_id"),
       ColumnBridge.column(gen).as(Seq("subj", "pred", "obj", "score")))
   }
 
-  /** The round-3 udf+explode implementation of [[relations]] — superseded as
-    * the production path by the native [[graft.plans.RelationsGenExpr]]
-    * Generator (zero per-token String deserialization, direct InternalRow
-    * emission), kept verbatim as the oracle for RelationsGenSpec's
-    * row-for-row equivalence assertion. */
-  def relationsUdf(tokenized: DataFrame, model: Broadcast[KgModel],
-                   accMentions: Option[LongAccumulator] = None,
-                   accCandidates: Option[LongAccumulator] = None,
-                   mentionMode: String = "scan",
-                   pageMarkers: Boolean = false): DataFrame = {
-    require(mentionMode == "scan" || mentionMode == "aho",
-      s"unknown mentionMode '$mentionMode' (expected scan|aho)")
-    val useAho = mentionMode == "aho"
-    val scoreUdf = udf { (tokens: Seq[String], anchor: Boolean, inScope: Boolean) =>
-      val m = model.value
-      val rels: Seq[ScoredRelation] =
-        if (tokens == null || !inScope) Seq.empty
-        else {
-          // Spark hands the array column as a mutable.ArraySeq wrapper —
-          // already IndexedSeq; the old toIndexedSeq COPIED every token
-          // array once per row (~6% of executor CPU in the round-4 JFR)
-          val toks: scala.collection.IndexedSeq[String] = tokens match {
-            case is: scala.collection.IndexedSeq[String @unchecked] => is
-            case other => other.toIndexedSeq
-          }
-          val ms = if (useAho) m.aho.scanGreedy(toks) else m.scanMentions(toks)
-          accMentions.foreach(_.add(ms.length.toLong))
-          if (ms.length >= 2) {
-            accCandidates.foreach(_.add((ms.length.toLong * (ms.length - 1))))
-            m.scoreRelations(toks, ms)
-          } else Seq.empty[ScoredRelation]
-        }
-      if (anchor)
-        rels :+ ScoredRelation(null, if (inScope) PageMarkerIn else PageMarkerOut, null, 0.0)
-      else rels
-    }
-    val (anchorCol, inScopeCol) = markerCols(pageMarkers)
-    tokenized
-      .select(col("url"), col("part_id"),
-        explode(scoreUdf(col("tokens"), anchorCol, inScopeCol)).as("rel"))
-      .select(col("url"), col("part_id"),
-        col("rel.subj").as("subj"), col("rel.pred").as("pred"),
-        col("rel.obj").as("obj"), col("rel.score").as("score"))
-  }
-
   /** anchor: the page's single sent_idx==0 row, or its posexplode_outer null
     * row when it has no sentences — exactly one per page either way. */
-  private def markerCols(pageMarkers: Boolean): (Column, Column) = (
+  private[graft] def markerCols(pageMarkers: Boolean): (Column, Column) = (
     if (pageMarkers) coalesce(col("sent_idx") === 0, lit(true)) else lit(false),
     if (pageMarkers) col("in_scope") else lit(true))
 
   /** End-to-end A1→A10: webpages → scored relation mentions. */
   def extractRelations(webpages: DataFrame, model: Broadcast[KgModel],
                        langs: Seq[String], numParts: Int,
-                       repartitionInput: Boolean = true,
-                       accMentions: Option[LongAccumulator] = None,
-                       accCandidates: Option[LongAccumulator] = None,
-                       mentionMode: String = "scan"): DataFrame =
+                       repartitionInput: Boolean = true): DataFrame =
     relations(
       tokenized(sentences(pageText(partitioned(webpages, langs, numParts, repartitionInput)))),
-      model, accMentions, accCandidates, mentionMode)
+      model)
 
   /** A11 phase 1 — per-part partial canonicalization. Keyed by part_id first:
     * after the explicit repartition the rows are already hash-distributed by
@@ -215,13 +161,13 @@ object Stages {
 
   /** The declarative groupBy form of [[partialTriples]] — row-for-row
     * equivalent (CanonicalizeSpec pins equality); kept as the equivalence
-    * oracle for the triples_agg path, exactly like Stages.relationsUdf twins
-    * RelationsGenExpr. The shipped path groups by part_id alone and folds the
-    * triple key into the [[graft.plans.TripleMap]] buffer: same groups, same
-    * measures, but Spark's per-row ObjectHashAggregate machinery (key
-    * UnsafeProjection + row murmur + LinkedHashMap probe + three interpreted
-    * updates — ~17% of executor CPU in the round-4 JFR) collapses to ~one
-    * group probe per partition. */
+    * oracle for the triples_agg path, exactly like the spec-scope
+    * Oracles.relationsUdf twins RelationsGenExpr. The shipped path groups by
+    * part_id alone and folds the triple key into the [[graft.plans.TripleMap]]
+    * buffer: same groups, same measures, but Spark's per-row
+    * ObjectHashAggregate machinery (key UnsafeProjection + row murmur +
+    * LinkedHashMap probe + three interpreted updates — ~17% of executor CPU
+    * in the round-4 JFR) collapses to ~one group probe per partition. */
   def partialTriplesGroupBy(relations: DataFrame): DataFrame =
     relations.groupBy(col("part_id"), col("subj"), col("pred"), col("obj"))
       .agg(count(lit(1)).as("n"), max(col("score")).as("score"),

@@ -354,9 +354,8 @@ object Dedup {
   }
 
   /** One propagation round (see the comment at the call site in
-    * componentsLoop). Package-private so the plan-audit tooling can dump a
-    * round's physical plan without running the loop. */
-  private[graft] def roundStep(edges: DataFrame, cur: DataFrame): DataFrame = {
+    * componentsLoop). */
+  private def roundStep(edges: DataFrame, cur: DataFrame): DataFrame = {
     val jump = cur.select(col("doc_id").as("src"), col("comp").as("dst"))
     val aux = edges.select(col("src"), col("dst")).union(jump)
     val nbrMin = aux.join(cur, aux("dst") === cur("doc_id"))
@@ -366,20 +365,6 @@ object Dedup {
         least(cur("comp"), coalesce(col("nbr_comp"), cur("comp"))).as("comp"),
         (col("changed") ||
           coalesce(col("nbr_comp"), cur("comp")) < cur("comp")).as("changed"))
-  }
-
-  /** Lazy single-round plan over `pairs` for plan audits (no persist, no
-    * checkpoint, no action — explain-able without running the loop). */
-  private[graft] def auditRoundPlan(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val init = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("doc_id"), least(col("src"), col("mn")).as("comp"),
-        lit(false).as("changed"))
-    roundStep(edges, init)
   }
 
   // ---- DuckDB oracle generators (exact replays of the PortableMd5 mode;

@@ -47,16 +47,6 @@ object TextStats {
         .as("max_token_len"))
   }
 
-  /** Whitespace + BPE-ish token counts: whitespace tokens, and subword-ish
-    * pieces via a pinned regex (letter runs, digit runs, single punct). */
-  def tokenCounts(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(
-      col(idCol).as("doc_id"),
-      size(filter(split(col(textCol), "\\s+"), t => length(t) > 0))
-        .cast("long").as("ws_tokens"),
-      size(filter(split(col(textCol), "(?<=[^\\p{L}\\p{Nd}])|(?=[^\\p{L}\\p{Nd}])"),
-        t => length(t) > 0 && t =!= " ")).cast("long").as("bpeish_tokens"))
-
   /** Winnowing fingerprint (Schleimer et al., SIGMOD'03): rolling hashes of
     * char k-grams, minimum per window, distinct — the standard near-dup /
     * provenance fingerprint. mode=PortableMd5 swaps xxhash64 for md5h60 so

@@ -43,9 +43,7 @@ object StreamingPipeline {
     pages.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Stages.partialTriples(Stages.extractRelations(
-            batch, model, cfg.langs, cfg.numParts, cfg.repartitionInput,
-            mentionMode = cfg.mentionMode))
+        Stages.partialTriples(Stages.extractRelations(batch, model, cfg.langs, cfg.numParts))
           .withColumn("batch_id", lit(batchId))
           .write.mode(SaveMode.Overwrite)
           .partitionBy("batch_id")

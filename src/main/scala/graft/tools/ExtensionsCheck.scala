@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * ScalaTest suite) because `spark.sql.extensions` is a static conf Spark
   * reads at SparkContext creation — the shared-session test JVM cannot
   * exercise it; GraftExtensionsSpec covers the same injection path
-  * reflectively in-suite.
+  * reflectively in-suite and runs this main in a forked JVM.
   */
 object ExtensionsCheck {
   def main(args: Array[String]): Unit = {

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * functions and fire the band-join rewrite. `spark.sql.extensions` itself is
   * a static conf read at SparkContext creation, which a shared-context test
   * JVM cannot re-exercise — graft.tools.ExtensionsCheck is the fresh-JVM
-  * end-to-end twin of this spec. */
+  * end-to-end twin of this spec, and the second test runs it in a forked
+  * JVM. */
 class GraftExtensionsSpec extends AnyFunSuite with SharedSpark {
 
   test("graft.GraftExtensions instantiates reflectively and wires a fresh session") {
@@ -53,5 +54,23 @@ class GraftExtensionsSpec extends AnyFunSuite with SharedSpark {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("conf-only spark.sql.extensions wiring works in a fresh JVM (ExtensionsCheck)") {
+    import scala.jdk.CollectionConverters._
+    // the test JVM's --add-opens, in either the split or the '=' form
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val addOpens = jvmArgs.zip(jvmArgs.drop(1) :+ "").flatMap {
+      case ("--add-opens", v) => Seq("--add-opens", v)
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case _ => Nil
+    }
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ addOpens ++
+      Seq("-cp", sys.props("java.class.path"), "graft.tools.ExtensionsCheck")
+    val proc = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").mkString
+    assert(proc.waitFor() == 0, s"ExtensionsCheck failed:\n$out")
+    assert(out.linesIterator.contains("ExtensionsCheck OK"), out)
   }
 }

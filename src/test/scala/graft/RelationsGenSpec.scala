@@ -7,10 +7,11 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native RelationsGenExpr Generator must be a drop-in for the udf+explode
-  * island it replaced: row-for-row equal output on the fixture corpus (both
-  * mention modes, with and without lineage page markers), with the UTF8String
-  * fast paths (streaming UTF-8 hash feed, U8 dictionary scan, U8 verb
-  * likeness) bit-equal to their String twins under adversarial unicode. */
+  * island it replaced: row-for-row equal output on the fixture corpus (with
+  * and without lineage page markers), with the UTF8String fast paths
+  * (streaming UTF-8 hash feed, U8 dictionary scan, U8 verb likeness)
+  * bit-equal to their String twins under adversarial unicode. The model
+  * builder rejects dictionary surfaces the scan cannot match. */
 class RelationsGenSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val dir = SparkKit.sf0001
@@ -24,21 +25,19 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
       .sortBy(t => (t._1, t._2, String.valueOf(t._3), t._4, String.valueOf(t._5), t._6))
   }
 
-  test("native generator == udf path, scan and aho modes") {
+  test("native generator == udf path") {
     val toks = Stages.tokenized(Stages.sentences(Stages.pageText(
       Stages.partitioned(webpages, Seq("en"), 8))))
-    for (mode <- Seq("scan", "aho")) {
-      val nat = collected(Stages.relations(toks, model, mentionMode = mode))
-      val ref = collected(Stages.relationsUdf(toks, model, mentionMode = mode))
-      assert(nat.nonEmpty && nat == ref, s"mode $mode diverges")
-    }
+    val nat = collected(Stages.relations(toks, model))
+    val ref = collected(Oracles.relationsUdf(toks, model))
+    assert(nat.nonEmpty && nat == ref)
   }
 
   test("native generator == udf path with page markers (partitionedAll flow)") {
     val toks = Stages.tokenized(Stages.sentencesOuter(Stages.pageText(
       Stages.partitionedAll(webpages, Seq("en"), 8))))
     val nat = collected(Stages.relations(toks, model, pageMarkers = true))
-    val ref = collected(Stages.relationsUdf(toks, model, pageMarkers = true))
+    val ref = collected(Oracles.relationsUdf(toks, model, pageMarkers = true))
     assert(nat == ref)
     // marker rows present for every page, in and out of scope
     assert(nat.exists(_._4 == Stages.PageMarkerIn))
@@ -119,6 +118,23 @@ class RelationsGenSpec extends AnyFunSuite with SharedSpark {
       assert(Featurize.pairIds(st, m1, m2).toSeq == ref)
       assert(Featurize.pairIds(u8, m1, m2).toSeq == ref)
       assert(new Featurize.Session(u8).ids(m1, m2).toSeq == ref)
+    }
+  }
+
+  test("model builder rejects surfaces the scan cannot match") {
+    def entry(surface: String, id: Long, prior: Double = 1.0) =
+      DictEntry(surface, id, "DISEASE", s"c$id", prior)
+    // 1- and 2-token surfaces build; duplicates resolve by prior, then id
+    val m = KgModel.fromData(spark, Seq(entry("leukemia", 1L),
+      entry("myeloid leukemia", 2L), entry("aml", 3L, 0.1), entry("aml", 6L, 0.9),
+      entry("aml", 4L, 0.9)),
+      Nil, Nil, 0.0).value
+    assert(m.scanMentions(IndexedSeq("aml", "myeloid", "leukemia")).map(_.canonical) ==
+      IndexedSeq("c4", "c2"))
+    for (bad <- Seq("acute myeloid leukemia", "", "myeloid  leukemia", " aml")) {
+      val e = intercept[IllegalArgumentException](
+        KgModel.fromData(spark, Seq(entry("leukemia", 1L), entry(bad, 5L)), Nil, Nil, 0.0))
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
 

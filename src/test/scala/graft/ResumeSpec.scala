@@ -55,6 +55,17 @@ class ResumeSpec extends AnyFunSuite with SharedSpark {
     assert(totalPages == expectedPages)
   }
 
+  test("run restores partitionOverwriteMode after success and after failure") {
+    val dir = SparkKit.sf0001
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    Pipeline.run(spark, s"$dir/webpages.parquet", Pipeline.Config(dir, tmp("conf"), numParts = 4))
+    assert(spark.conf.get(key) == "static", "a successful run must restore the conf")
+    intercept[Exception](Pipeline.run(spark, s"$dir/webpages.parquet",
+      Pipeline.Config(s"$dir/no-such-fixtures", tmp("conf-fail"), numParts = 4)))
+    assert(spark.conf.get(key) == "static", "a failed run must restore the conf")
+  }
+
   test("run over input with zero in-scope pages commits a valid empty table") {
     val dir = SparkKit.sf0001
     val out = tmp("empty")
